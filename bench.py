@@ -46,12 +46,17 @@ def _repo_dir() -> str:
     return os.path.dirname(os.path.abspath(__file__))
 
 
-def _bench_history(sf: float | None = None) -> dict[int, dict[str, float]]:
+def _bench_history(
+    sf: float | None = None, cpus: int | None = None
+) -> dict[int, dict[str, float]]:
     """Per-round per-query minima from the driver's BENCH_r*.json
     artifacts on disk: {round: {query: sec}}. ``sf`` restricts to
     rounds benched at that scale factor — floors from an sf0.1 history
     mean nothing for an sf1 run, and one foreign-sf artifact in the
     lookback window would otherwise poison the next rounds' floors.
+    ``cpus`` likewise restricts to rounds benched at that core count
+    (the artifact's ``cpus`` field): a 32-core floor is unreachable on
+    4 cores, and chasing it spends every slot's full sample budget.
     Malformed or pre-parse files are skipped — history is advisory."""
     import glob
     import re
@@ -63,8 +68,11 @@ def _bench_history(sf: float | None = None) -> dict[int, dict[str, float]]:
             continue
         try:
             with open(p) as fh:
-                parsed = json.load(fh).get("parsed") or {}
+                artifact = json.load(fh)
+            parsed = artifact.get("parsed") or {}
             if sf is not None and float(parsed.get("sf", -1.0)) != sf:
+                continue
+            if cpus is not None and artifact.get("cpus") != cpus:
                 continue
             q = parsed.get("queries")
             if isinstance(q, dict):
@@ -112,8 +120,8 @@ def _floor_from_history(
     name: str, hist: dict[int, dict[str, float]], lookback: int = 3
 ) -> float | None:
     """A query's quiet-floor estimate: the min of its per-round minima
-    over the most recent ``lookback`` rounds of ``hist`` (an sf-scoped
-    ``_bench_history`` result, loaded ONCE by the caller — not
+    over the most recent ``lookback`` rounds of ``hist`` (an sf- and
+    cpus-scoped ``_bench_history`` result, loaded ONCE by the caller — not
     re-globbed per query) that measured it. Recent rounds only —
     headline slots GROW legs between rounds, so an all-time min would
     chase a floor the current (larger) surface can no longer reach."""
@@ -798,12 +806,13 @@ def main() -> None:
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warm-up
 
     qs = queries()
-    # sf-scoped floor history, loaded ONCE (an sf of -1.0 means the SF
-    # dir name was unparseable — the scale is then UNKNOWN, and
-    # matching it against other unknown-or-absent sf artifacts would
-    # re-admit exactly the cross-sf floor poisoning the scoping
-    # prevents, so floors are disabled instead)
-    hist = _bench_history(sf=sf) if sf >= 0 else {}
+    # sf- and core-count-scoped floor history, loaded ONCE (an sf of
+    # -1.0 means the SF dir name was unparseable — the scale is then
+    # UNKNOWN, and matching it against other unknown-or-absent sf
+    # artifacts would re-admit exactly the cross-sf floor poisoning the
+    # scoping prevents, so floors are disabled instead)
+    cpus = spark.sparkContext.defaultParallelism
+    hist = _bench_history(sf=sf, cpus=cpus) if sf >= 0 else {}
     # JIT warm-up: run every headline query once on the TINY sf0.001
     # fixture so the benched samples measure the plan, not first-call
     # class-loading / whole-stage-codegen compilation (each query's

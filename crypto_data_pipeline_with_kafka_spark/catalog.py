@@ -12,6 +12,7 @@ partitioned by date/key; the loaders keep that orthogonal.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,6 +70,35 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # is a pure re-tag (identical epoch micros).
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | T.StructType
+) -> DataFrame:
+    """A small driver-side relation (a seed dim, a lexicon, a stamp
+    row, an empty-branch placeholder) as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame`` on a Python list goes through
+    ``sc.parallelize``: the result is a ``LogicalRDD`` over a
+    ``PythonRDD``, so every stage that reads it starts a Python worker
+    and unpickles the rows, even when every operator around it is a JVM
+    built-in. An Arrow table carrying the schema's exact Arrow types
+    plans as a ``LocalRelation`` instead, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says, and under Spark
+    Connect too. ``schema`` is a DDL string or a ``StructType``; zero
+    rows give an empty relation of that schema."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def widen_if_narrow(df: DataFrame, *key_cols: str) -> DataFrame:

@@ -26,7 +26,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from crypto_data_pipeline_with_kafka_spark.catalog import widen_if_narrow
+from crypto_data_pipeline_with_kafka_spark.catalog import (
+    local_frame,
+    widen_if_narrow,
+)
 from crypto_data_pipeline_with_kafka_spark.functions.text import (
     kgrams_from_tokens,
     shingles_from_tokens,
@@ -1652,7 +1655,7 @@ def check_store_algo(
             "contract; the winnow store and curate_corpus gates always "
             "stamp)"
         )
-    spark.createDataFrame([(algo,)], "algo string").coalesce(1).write.mode(
+    local_frame(spark, [(algo,)], "algo string").coalesce(1).write.mode(
         "overwrite"
     ).parquet(marker)
 

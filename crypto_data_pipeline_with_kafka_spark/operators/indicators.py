@@ -42,6 +42,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from crypto_data_pipeline_with_kafka_spark.catalog import local_frame
+
 INDICATOR_TYPES = (("SMA", 1), ("RSI", 2), ("BB_UP", 3), ("BB_DOWN", 4))
 
 WINDOW_ROWS = 14  # trailing frame length, reference spark_job_1.py:28
@@ -50,9 +52,7 @@ WINDOW_ROWS = 14  # trailing frame length, reference spark_job_1.py:28
 def indicator_type_dim(spark: SparkSession) -> DataFrame:
     """The reference's ``dim_indicator_type_1`` seed rows
     (``datawarehouse/indicator_dim_fact.sql:1-9``)."""
-    return spark.createDataFrame(
-        [(name, tid) for name, tid in INDICATOR_TYPES], ["type_name", "type_id"]
-    )
+    return local_frame(spark, INDICATOR_TYPES, "type_name string, type_id long")
 
 
 def compute_indicators(

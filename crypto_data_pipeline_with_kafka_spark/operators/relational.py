@@ -33,9 +33,11 @@ def get_or_create_keys(
     the distinct is a map-side-combined shuffle of just the names.
     """
     # the dim side is small by definition (docstring above), so the
-    # anti-join takes an explicit broadcast: a createDataFrame dim is a
-    # stats-less LogicalRDD, and the un-hinted anti-join planned as a
-    # SortMergeJoin — two exchanges + two sorts for a few dim rows (r15)
+    # anti-join takes an explicit broadcast whatever the dim's source: a
+    # local_frame dim carries exact size stats, but a dim derived from
+    # an RDD or a deep plan may carry none, and the un-hinted anti-join
+    # then plans as a SortMergeJoin — two exchanges + two sorts for a
+    # few dim rows
     new_names = (
         incoming.select(F.col(name_col))
         .distinct()

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from crypto_data_pipeline_with_kafka_spark.catalog import load_table
+from crypto_data_pipeline_with_kafka_spark.catalog import load_table, local_frame
 from crypto_data_pipeline_with_kafka_spark.operators.fusion import (
     ndcg_at_k,
     rrf_fuse,
@@ -249,7 +249,7 @@ def fn_time_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "collapse/trim, md5-pinned against DuckDB's nfc_normalize/lower/"
     "regexp_replace/trim applied in the SAME order (case-mapping is "
     "not NFC-commutative in general)",
-    tags=("string", "regex", "pii", "url", "normalize"),
+    tags=("string", "regex", "pii", "url", "normalize", "udf"),
 )
 def fn_string_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crypto_data_pipeline_with_kafka_spark.functions.text import (
@@ -844,7 +844,7 @@ def udtf_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # returned stats dict becomes one row per stage counter (names on
     # token, counts on n). The stats dict is a bounded driver-side
     # artifact by construction (ONE aggregation row — curation.py's
-    # stats contract), so createDataFrame from it is the BPE-rules
+    # stats contract), so a local_frame built from it is the BPE-rules
     # pattern, not a collect smell.
     from crypto_data_pipeline_with_kafka_spark.curation import curate_corpus
 
@@ -864,7 +864,8 @@ def udtf_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .unionByName(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [
                     (-2000000001, _CURATE_JUNK_QUALITY),
                     (-2000000002, _CURATE_JUNK_RATIO),
@@ -891,7 +892,8 @@ def udtf_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         _, cstats = curate_corpus(spark, planted_cur)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-    curate = spark.createDataFrame(
+    curate = local_frame(
+        spark,
         sorted((k, int(v)) for k, v in cstats.items()),
         "token string, n long",
     ).select(

@@ -339,8 +339,9 @@ def incremental_indicator_batch(
     """The reference recomputes indicators over the ENTIRE kline history
     every run — O(history) per run (SURVEY §4, 'the single biggest
     scalability fix'). Incremental version: indicators are a trailing
-    14-row frame, so a new row's value depends only on the previous 13
-    rows of its key. Recompute over (affected keys' history ∪ new rows)
+    14-row frame, and RSI's first ``lag`` diff in that frame reads one
+    row further back, so a new row's value depends only on the previous
+    14 rows of its key. Recompute over (affected keys' history ∪ new rows)
     and emit only rows at-or-after each key's first new timestamp.
 
     At 100 TB with time-partitioned facts, the semi-join prunes to the
@@ -392,12 +393,13 @@ def run_incremental_indicator_stream(
     exists to fix, so the caller must choose the bound consciously).
     It bounds the per-batch history read to that many date partitions
     before the batch's earliest event (PartitionFilters prune the
-    rest). The 14-ROW trailing frame needs the previous 13 rows per
-    key, so the bound must cover each key's inter-event spacing × 13
-    (e.g. hourly klines → 1 day covers it 1.8×; daily bars → pass
-    ≥ 13). Passing ``None`` opts in to reading the affected keys' full
-    history (still key-pruned via semi-join, never O(all-keys)) and
-    WARNS — acceptable for bounded backfills, a foot-gun at 100 TB.
+    rest). The 14-ROW trailing frame plus RSI's first ``lag`` diff need
+    the previous 14 rows per key, so the bound must cover each key's
+    inter-event spacing × 14 (e.g. hourly klines → 1 day covers it
+    1.7×; daily bars → pass ≥ 14). Passing ``None`` opts in to reading
+    the affected keys' full history (still key-pruned via semi-join,
+    never O(all-keys)) and WARNS — acceptable for bounded backfills, a
+    foot-gun at 100 TB.
 
     After draining, ``indicator_store`` equals a full-history batch
     recompute regardless of batch arrival order."""
@@ -406,7 +408,7 @@ def run_incremental_indicator_stream(
             "run_incremental_indicator_stream: lookback_days is None — each "
             "micro-batch reads the affected keys' FULL history (key-pruned "
             "but unbounded in time). Pass lookback_days >= max per-key "
-            f"inter-event spacing in days x {WINDOW_ROWS - 1} to bound the "
+            f"inter-event spacing in days x {WINDOW_ROWS} to bound the "
             "per-batch tail read via partition pruning.",
             stacklevel=2,
         )

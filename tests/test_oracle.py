@@ -9,14 +9,21 @@ import pytest
 from crypto_data_pipeline_with_kafka_spark.plans.registry import all_queries
 from tests.conftest import SF_SMOKE
 from tests.oracle_utils import compare
+from tests.plan_checks import python_backed_nodes
 
 QUERIES = all_queries()
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, sf_correct, name):
+    """Value parity with the oracle, plus the Python rule: only a query
+    tagged ``udf`` may plan a Python exec node or read a Python-built
+    RDD (small driver-side relations go through ``local_frame``)."""
     q = QUERIES[name]
     df = q.fn(spark, sf_correct)
+    if "udf" not in q.tags:
+        python_nodes = python_backed_nodes(df)
+        assert not python_nodes, python_nodes
     if q.oracle is None:
         assert df.count() >= 0  # rows-only check (driver's weaker gate)
         assert len(df.schema.fields) > 0

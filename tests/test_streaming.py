@@ -333,7 +333,7 @@ def test_incremental_stream_lookback_warns_and_bounded_equivalence(
     """lookback_days is a REQUIRED keyword (r5: an unbounded default was
     the reference's own O(history) pathology); the explicit None opt-in
     must WARN (unbounded per-batch tail read), and an explicit bound
-    that covers the frame (13 prior rows per key) must produce the
+    that covers the frame (14 prior rows per key) must produce the
     identical store."""
     import inspect
 
@@ -361,7 +361,7 @@ def test_incremental_stream_lookback_warns_and_bounded_equivalence(
             str(tmp_path / "ind_a"),
             lookback_days=None,
         )
-    # sf0.001 spans ~1 month; 60 days covers any key's 13-row tail
+    # sf0.001 spans ~1 month; 60 days covers any key's 14-row tail
     run_incremental_indicator_stream(
         spark,
         src + "/*.parquet",
@@ -377,6 +377,67 @@ def test_incremental_stream_lookback_warns_and_bounded_equivalence(
     )
     assert a.count() == b.count() > 0
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_indicator_stream_lookback_bound_is_window_rows(spark, tmp_path):
+    """The lookback bound is tight: one key with events exactly one day
+    apart, split into two micro-batches at a day boundary. RSI's first
+    ``lag`` diff in the 14-row frame reads a 15th event, so the first
+    recomputed row needs WINDOW_ROWS prior rows: ``lookback_days =
+    WINDOW_ROWS`` reproduces the full recompute, one day fewer does
+    not."""
+    import datetime as dt
+    import glob
+    import os
+
+    from crypto_data_pipeline_with_kafka_spark.catalog import local_frame
+    from crypto_data_pipeline_with_kafka_spark.operators.indicators import (
+        WINDOW_ROWS,
+    )
+    from crypto_data_pipeline_with_kafka_spark.streaming.pipeline import (
+        run_incremental_indicator_stream,
+    )
+
+    day0 = dt.datetime(2024, 1, 1, 12, tzinfo=dt.timezone.utc)
+    split = WINDOW_ROWS + 6  # first event of the second batch
+    events = local_frame(
+        spark,
+        [
+            (i, day0 + dt.timedelta(days=i), 7, "trade", 100.0 + 7 * i % 10, "")
+            for i in range(split + 10)
+        ],
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
+    )
+    src = str(tmp_path / "src")
+    as_ns = events.withColumn("ts", F.unix_micros("ts") * 1000)
+    as_ns.filter(f"event_id < {split}").coalesce(1).write.parquet(src)
+    (first,) = glob.glob(f"{src}/*.parquet")
+    as_ns.filter(f"event_id >= {split}").coalesce(1).write.mode("append").parquet(src)
+    (second,) = set(glob.glob(f"{src}/*.parquet")) - {first}
+    # one file per micro-batch, taken oldest-modified first
+    os.utime(first, (1_000_000, 1_000_000))
+    os.utime(second, (2_000_000, 2_000_000))
+
+    cols = ("user_id", "ts", "type_name", "ind_value")
+    want = compute_indicators(events).select(*cols)
+
+    def store(lookback_days):
+        out = str(tmp_path / f"ind_{lookback_days}")
+        run_incremental_indicator_stream(
+            spark,
+            src + "/*.parquet",
+            str(tmp_path / f"ev_{lookback_days}"),
+            out,
+            lookback_days=lookback_days,
+        )
+        return spark.read.parquet(out).select(*cols)
+
+    got = store(WINDOW_ROWS)
+    assert got.count() == want.count() > 0
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    short = store(WINDOW_ROWS - 1)
+    assert short.exceptAll(want).count() > 0
 
 
 def test_watermark_drops_too_late_rows_in_append_mode(spark, tmp_path):
