@@ -4,7 +4,10 @@ into streaming queries (SURVEY §3.2-3.3 engine equivalents).
 
 Semantics mapping (SURVEY §2.9):
   ST1 trigger cadence  → trigger(processingTime=...) / AvailableNow
-  ST2 delivery         → checkpointed offsets + idempotent foreachBatch
+  ST2 delivery         → replayable file source + idempotent foreachBatch
+                         step. No runner keeps a durable checkpoint: a
+                         re-run re-drains from epoch 0, and the batch_id=N
+                         overwrite or the event anti-join absorbs it
                          (≥ the reference's manual-commit at-least-once)
   ST3 dedup            → dropDuplicates[WithinWatermark]
   ST4 late data        → withWatermark + incremental tail recompute;
@@ -24,11 +27,13 @@ from __future__ import annotations
 
 import datetime as _dt
 import itertools
+import os
 import warnings
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from crypto_data_pipeline_with_kafka_spark.operators.dedup import (
     incremental_hamming_dedup,
@@ -50,16 +55,6 @@ from crypto_data_pipeline_with_kafka_spark.sources.readers import (
 from crypto_data_pipeline_with_kafka_spark.sources.sinks import target_exists
 
 _name_counter = itertools.count()
-
-# run_to_memory mutates session-global conf around a blocking run; the
-# lock serializes concurrent run_to_memory callers on one session so a
-# second caller can never read the first's temporary value as the
-# "previous" conf to restore. (A concurrent BATCH query on the same
-# session can still plan under the temporary value — callers needing
-# full isolation should drive streams from a dedicated SparkSession.)
-import threading
-
-_stream_conf_lock = threading.Lock()
 
 _DT_FMT = "yyyy-MM-dd"
 
@@ -87,46 +82,61 @@ def pruned_store_read(
     return df.withColumn("dt", F.col("dt").cast("string"))
 
 
+def _drain(writer: DataStreamWriter) -> list[dict]:
+    """Run a stream writer to completion with the AvailableNow trigger;
+    return its ``recentProgress``, one dict per micro-batch (capped at
+    ``spark.sql.streaming.numRecentProgressUpdates``). Exactly-once
+    meets here: replayable source, offset log, idempotent sink. No
+    caller sets ``checkpointLocation``, so the offset log lives only as
+    long as the query: every call re-drains the source from epoch 0,
+    and the sink (``batch_id=N`` overwrite, event anti-join, fresh
+    memory table) makes that re-drain harmless."""
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q.recentProgress
+
+
+def run_store_stream(
+    stream: DataFrame, step: Callable[[DataFrame, int], object]
+) -> list[dict]:
+    """Drain ``stream`` through ``step(batch, epoch_id)`` once per
+    non-empty micro-batch (an empty delivery is a no-op, never a write);
+    return the progress list (:func:`_drain`)."""
+
+    def guarded(batch: DataFrame, epoch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        step(batch, int(epoch_id))
+
+    return _drain(stream.writeStream.foreachBatch(guarded))
+
+
 def run_to_memory(
-    stream_df,
+    build: Callable[[SparkSession], DataFrame],
     output_mode: str,
     name_prefix: str = "stream_out",
-    state_partitions: int | None = None,
-    spark: SparkSession | None = None,
+    *,
+    spark: SparkSession,
 ) -> DataFrame:
-    """Drive a streaming DataFrame to completion with the AvailableNow
+    """Drive a streaming query to completion with the AvailableNow
     trigger into a memory sink; return the materialized result table.
     This runs the REAL incremental engine (state store, watermarks) over
     the bounded input — the hourly-Airflow-batch shape (ST1) done right.
 
-    ``stream_df`` is either a streaming DataFrame (legacy path: the
-    settings below toggle SESSION-GLOBAL conf around the run, restored
-    after — a concurrent batch query on the same session can plan under
-    the temporary values) or a CALLABLE ``(SparkSession) -> streaming
-    DataFrame`` (pass ``spark`` to clone from): the builder constructs
-    the stream on a CLONED session (``spark.newSession()`` — same
-    SparkContext and cache, isolated SQLConf/temp views), so the
-    state-partition and state-store settings bind to the clone alone
-    and the caller's session is never mutated (r4 advice). The
-    registered stream queries use the builder path; the returned
-    DataFrame belongs to the clone, which shares the context, so
-    collects and unions with caller-session frames work unchanged.
+    ``build(session)`` constructs the streaming DataFrame on a CLONE of
+    ``spark`` (``spark.newSession()``: same SparkContext and cache,
+    isolated SQLConf and temp views), so the state settings below bind
+    to the clone alone and the caller's session is never mutated. The
+    returned DataFrame belongs to the clone, which shares the context,
+    so collects and unions with caller-session frames work unchanged.
 
-    ``state_partitions`` sizes the stream's state-store parallelism:
-    stateful operators shuffle to ``spark.sql.shuffle.partitions`` AT
-    QUERY START (AQE is disabled for stateful streams, and the count is
-    frozen into the checkpoint), and every micro-batch pays one state
-    store open+commit PER partition — pure fixed cost when per-key
-    state is small. It is a deployment knob, decoupled from the batch
-    setting: size it to cluster cores for production topics (env
-    ``SPARK_GRAFT_STREAM_PARTITIONS``); the default 4 fits the bounded
-    bench-scale replays, where 32 state partitions were measured as ~4×
-    pure overhead on a KB-sized state. NOTE the default deliberately
-    OVERRIDES the session's shuffle setting (the driver/bench sessions
-    size that for batch work, which is the wrong number for KB-scale
-    stream state) — a production deployment with real state volume
-    must set ``state_partitions`` or the env var explicitly. The batch
-    conf is restored after the run.
+    State-store PARALLELISM comes from ``SPARK_GRAFT_STREAM_PARTITIONS``
+    (default 4): stateful operators shuffle to that many partitions,
+    frozen at query start (AQE is off for stateful streams), and every
+    micro-batch pays one state-store open+commit PER partition. The
+    default fits the bounded bench-scale replays, where 32 measured ~4×
+    pure overhead on KB-sized state; size it to cluster cores for real
+    state volume.
 
     State-store BACKEND: the default HDFS-backed provider keeps state
     on the JVM heap — right whenever state ≪ executor memory. For
@@ -136,71 +146,27 @@ def run_to_memory(
     incremental changelog checkpointing, trading fixed per-batch cost
     (measured ~4× on the KB-scale replays — do not default to it) for
     state capacity no longer bounded by the heap."""
-    import os
-
-    if state_partitions is None:
-        state_partitions = int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "4"))
     name = f"{name_prefix}_{next(_name_counter)}"
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-
-    if callable(stream_df):
-        if spark is None:
-            raise TypeError("builder-path run_to_memory needs spark= to clone from")
-        sess = spark.newSession()
-        # newSession() builds its SQLConf from builder/context conf; the
-        # caller's RUNTIME spark.conf.set overrides do NOT carry over.
-        # Copy the one that changes event-time semantics (window/session
-        # boundaries) so stream and batch always agree; callers relying
-        # on other runtime overrides should set them at builder time.
+    sess = spark.newSession()
+    # newSession() builds its SQLConf from builder/context conf; the
+    # caller's RUNTIME spark.conf.set overrides do NOT carry over.
+    # Copy the one that changes event-time semantics (window/session
+    # boundaries) so stream and batch always agree; callers relying
+    # on other runtime overrides should set them at builder time.
+    tz = "spark.sql.session.timeZone"
+    sess.conf.set(tz, spark.conf.get(tz))
+    parts = int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "4"))
+    sess.conf.set("spark.sql.shuffle.partitions", parts)
+    if os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower() == "rocksdb":
         sess.conf.set(
-            "spark.sql.session.timeZone",
-            spark.conf.get("spark.sql.session.timeZone"),
+            "spark.sql.streaming.stateStore.providerClass",
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider",
         )
-        sess.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        if os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower() == "rocksdb":
-            sess.conf.set(
-                prov_key,
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
-        q = (
-            stream_df(sess)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return sess.table(name)
-
-    spark = stream_df.sparkSession
-    with _stream_conf_lock:
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_prov = spark.conf.get(prov_key, None)
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        if os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower() == "rocksdb":
-            spark.conf.set(
-                prov_key,
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
-        try:
-            q = (
-                stream_df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-            if prev_prov is None:
-                spark.conf.unset(prov_key)
-            else:
-                spark.conf.set(prov_key, prev_prov)
-    return spark.table(name)
+    _drain(
+        build(sess).writeStream.format("memory").queryName(name).outputMode(output_mode)
+    )
+    return sess.table(name)
 
 
 def streaming_dedup(events: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -368,7 +334,7 @@ def run_incremental_indicator_stream(
     key_cols: Sequence[str] = ("user_id",),
     *,
     lookback_days: int | None,
-) -> None:
+) -> list[dict]:
     """Entry point A as a STREAMING query with incremental recompute.
     Both stores are **date-partitioned** (warehouse.py layout). Per
     micro-batch:
@@ -402,7 +368,10 @@ def run_incremental_indicator_stream(
     foot-gun at 100 TB.
 
     After draining, ``indicator_store`` equals a full-history batch
-    recompute regardless of batch arrival order."""
+    recompute regardless of batch arrival order. A re-run over the same
+    source re-drains it from epoch 0; the event anti-join in step 1
+    reduces every already-stored batch to a no-op. Returns the stream's
+    progress (:func:`_drain`)."""
     if lookback_days is None:
         warnings.warn(
             "run_incremental_indicator_stream: lookback_days is None — each "
@@ -419,8 +388,6 @@ def run_incremental_indicator_stream(
         s = batch.sparkSession
         batch = _with_dt(batch)
         bounds = batch.agg(F.min("dt").alias("lo"), F.max("dt").alias("hi")).first()
-        if bounds["lo"] is None:  # empty batch
-            return
         stores_exist = target_exists(s, events_store)
         if stores_exist:
             # dedupe redelivered rows against the store, partition-pruned
@@ -484,8 +451,7 @@ def run_incremental_indicator_stream(
             inc.write.mode("append").partitionBy("dt").parquet(indicator_store)
         fresh.write.mode("append").partitionBy("dt").parquet(events_store)
 
-    q = stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination()
+    return run_store_stream(stream, handle)
 
 
 def run_incremental_dedup_stream(
@@ -493,7 +459,7 @@ def run_incremental_dedup_stream(
     source_path: str,
     store_dir: str,
     min_jaccard: float = 0.8,
-) -> None:
+) -> list[dict]:
     """Streaming near-dup gate over an arriving corpus: each micro-batch
     of documents is MinHash-LSH deduped against the persisted band/
     shingle index of every EARLIER batch
@@ -504,30 +470,25 @@ def run_incremental_dedup_stream(
     Delivery is exactly-once WITHOUT any anti-join: the batch step only
     overwrites its own ``batch_id=N`` partitions and only reads
     ``batch_id < N`` (directory-pruned), so a redelivered epoch rewrites
-    byte-identical data (asserted by the redelivery test). Consequently
-    the index and the checkpoint must be retained TOGETHER: a fresh
-    checkpoint restarts epoch ids at 0 and would overwrite the index
-    from the beginning.
+    byte-identical data (asserted by the redelivery test). A re-run
+    re-drains the source from epoch 0: the file source replays the same
+    files in the same order, so each epoch rewrites the partitions it
+    wrote before. Returns the stream's progress (:func:`_drain`).
 
     Flags match the one-shot batch run when files arrive in increasing
     doc_id order (the file source processes in modification-time order;
     the equivalence test writes files that way). Out-of-order arrival
     still finds every cross-batch duplicate pair — just attributed to
     whichever member arrived later."""
-    stream = documents_stream_reader(spark, source_path, max_files_per_trigger=1)
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        incremental_minhash_dedup(
+    return run_store_stream(
+        documents_stream_reader(spark, source_path, max_files_per_trigger=1),
+        lambda batch, epoch_id: incremental_minhash_dedup(
             batch.select("doc_id", "text"),
             store_dir,
-            int(epoch_id),
+            epoch_id,
             min_jaccard=min_jaccard,
-        )
-
-    q = stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination()
+        ),
+    )
 
 
 def run_incremental_ivf_stream(
@@ -536,7 +497,7 @@ def run_incremental_ivf_stream(
     store_dir: str,
     min_cosine: float = 0.8,
     probes: int = 1,
-) -> None:
+) -> list[dict]:
     """Streaming ANN-index maintenance over arriving embeddings — the
     dense twin of :func:`run_incremental_dedup_stream`: each micro-batch
     of vectors is assigned to the persisted IVF cell store and flagged
@@ -547,7 +508,8 @@ def run_incremental_ivf_stream(
     Same exactly-once contract: the batch step overwrites only its own
     ``batch_id=N`` partitions and reads only ``batch_id < N``
     (directory-pruned), so a redelivered epoch rewrites byte-identical
-    data; index and checkpoint must be retained together. REQUIRES a
+    data, and a re-run re-drains the source from epoch 0 over the same
+    partitions. Returns the stream's progress. REQUIRES a
     trained cell geometry at ``store_dir/centroids`` before the stream
     starts (``save_ivf_index`` or a first-batch ``incremental_ivf_update``
     call with ``centroids=``) — a stream must not re-derive geometry
@@ -564,9 +526,10 @@ def run_incremental_ivf_stream(
     ``similarity.retrain_ivf_store(spark, store_dir)`` (re-derives C
     from the current size, re-assigns the persisted cells in one
     distributed pass, swaps with backup-rename discipline), and
-    restart — the checkpoint keeps advancing epoch ids, and the
-    re-trained store is pytest-equal to one bootstrapped at the new
-    geometry from the start."""
+    restart over the old files plus the new ones (epoch ids restart at
+    0, so new files alone would overwrite the first ``batch_id``
+    partitions); the re-trained store is pytest-equal to one
+    bootstrapped at the new geometry from the start."""
     from crypto_data_pipeline_with_kafka_spark.operators.similarity import (
         ivf_store_needs_retrain,
     )
@@ -593,19 +556,16 @@ def run_incremental_ivf_stream(
             stacklevel=2,
         )
 
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        incremental_ivf_update(
+    return run_store_stream(
+        stream,
+        lambda batch, epoch_id: incremental_ivf_update(
             batch.select("vec_id", "embedding"),
             store_dir,
-            int(epoch_id),
+            epoch_id,
             min_cosine=min_cosine,
             probes=probes,
-        )
-
-    q = stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination()
+        ),
+    )
 
 
 def run_incremental_hamming_stream(
@@ -614,7 +574,7 @@ def run_incremental_hamming_stream(
     store_dir: str,
     max_hamming: int = 6,
     n_chunks: int = 4,
-) -> None:
+) -> list[dict]:
     """Streaming SimHash near-dup gate over an arriving corpus — the
     hamming-index sibling of :func:`run_incremental_dedup_stream`
     (same file source, same epoch_id-as-batch_id exactly-once
@@ -628,12 +588,9 @@ def run_incremental_hamming_stream(
     same 64-bit space, so a mixed store would emit chance cross-rule
     collisions as dup flags and miss real same-rule pairs after an
     upgrade. Gate a mixed-modality feed with one store per modality,
-    the ``curate_corpus`` layout."""
-    stream = documents_stream_reader(spark, source_path, max_files_per_trigger=1)
+    the ``curate_corpus`` layout. Returns the stream's progress."""
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
         # release the hasher's per-batch word-count cache after the
         # batch's store writes complete — a long-running stream must
         # not accumulate one pinned relation per micro-batch (r15, the
@@ -645,7 +602,7 @@ def run_incremental_hamming_stream(
                     batch.select("doc_id", "text"), caches=batch_caches
                 ),
                 store_dir,
-                int(epoch_id),
+                epoch_id,
                 max_hamming=max_hamming,
                 n_chunks=n_chunks,
                 # era stamp: this runner's bits are text SimHash — a
@@ -658,8 +615,9 @@ def run_incremental_hamming_stream(
             for c in batch_caches:
                 c.unpersist()
 
-    q = stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination()
+    return run_store_stream(
+        documents_stream_reader(spark, source_path, max_files_per_trigger=1), handle
+    )
 
 
 def run_incremental_winnow_stream(
@@ -670,7 +628,7 @@ def run_incremental_winnow_stream(
     window: int = 4,
     min_shared: int = 2,
     max_doc_freq: int | None = 8,
-) -> None:
+) -> list[dict]:
     """Streaming PARTIAL-overlap gate over an arriving corpus — the
     winnowing-index sibling of :func:`run_incremental_dedup_stream`
     (same file source, same epoch_id-as-batch_id exactly-once
@@ -679,28 +637,27 @@ def run_incremental_winnow_stream(
     earlier batch
     (:func:`...operators.dedup.incremental_winnowing_dedup`) — the
     detector for a copied span of ≥ window+k−1 tokens inside otherwise
-    new text, which the whole-doc MinHash stream dilutes away."""
+    new text, which the whole-doc MinHash stream dilutes away. Unlike
+    its siblings it cannot be re-run over a store holding more than one
+    batch: the re-drain from epoch 0 is refused by the store's
+    decreasing-batch-id check (``check_store_batch_monotonic``).
+    Returns the stream's progress."""
     from crypto_data_pipeline_with_kafka_spark.operators.dedup import (
         incremental_winnowing_dedup,
     )
 
-    stream = documents_stream_reader(spark, source_path, max_files_per_trigger=1)
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        incremental_winnowing_dedup(
+    return run_store_stream(
+        documents_stream_reader(spark, source_path, max_files_per_trigger=1),
+        lambda batch, epoch_id: incremental_winnowing_dedup(
             batch.select("doc_id", "text"),
             store_dir,
-            int(epoch_id),
+            epoch_id,
             k=k,
             window=window,
             min_shared=min_shared,
             max_doc_freq=max_doc_freq,
-        )
-
-    q = stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination()
+        ),
+    )
 
 
 def price_ingestion_stream(spark: SparkSession, source_path: str) -> DataFrame:

@@ -118,6 +118,7 @@ SLOW_TESTS = frozenset({
     "test_sq8_exactness_contract_random_vectors",
     "test_sq8_scalar_quantization",
     "test_store_algo_stamp_refuses_era_mix",
+    "test_stream_crash_restart_equals_uninterrupted_run",
     "test_streaming_file_source_runs",
     "test_video_fingerprint_shift_tolerance",
     "test_video_temporal_majority_near_dup_pairs",

@@ -8,6 +8,7 @@ from __future__ import annotations
 import shutil
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from crypto_data_pipeline_with_kafka_spark.catalog import load_table
@@ -19,6 +20,7 @@ from crypto_data_pipeline_with_kafka_spark.sources.kafka_messages import (
     typed_price_rows,
     to_kafka_shape,
 )
+from crypto_data_pipeline_with_kafka_spark.sources.sinks import target_exists
 from crypto_data_pipeline_with_kafka_spark.streaming.pipeline import (
     foreach_batch_idempotent_append,
     incremental_indicator_batch,
@@ -157,9 +159,14 @@ def test_streaming_incremental_indicators_end_to_end(spark, tmp_path):
 
     ev_store = str(tmp_path / "events_store")
     ind_store = str(tmp_path / "ind_store")
-    run_incremental_indicator_stream(
+    progress = run_incremental_indicator_stream(
         spark, src + "/*.parquet", ev_store, ind_store, lookback_days=60
     )
+    # one progress dict per file; numInputRows counts the rows of every
+    # scan of the batch: the shared empty-batch guard, the date-bounds
+    # aggregate and the persisted anti-join input read each file once
+    assert [p["batchId"] for p in progress] == [0, 1]
+    assert sum(p["numInputRows"] for p in progress) == 3 * events.count()
 
     got = spark.read.parquet(ind_store).select("user_id", "ts", "type_name", "ind_value")
     want = compute_indicators(events).select("user_id", "ts", "type_name", "ind_value")
@@ -195,13 +202,21 @@ def test_stateful_streaming_ema_carries_state_across_batches(spark, tmp_path):
 
     # maxFilesPerTrigger=1 ensures two micro-batches
     raw_schema = "event_id long, ts long, user_id long, event_type string, value double, props string"
-    raw = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+
+    def raw(s):
+        return (
+            s.readStream.schema(raw_schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+            .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        )
+
+    got = run_to_memory(
+        lambda s: streaming_ema(raw(s)),
+        output_mode="append",
+        name_prefix="sema",
+        spark=spark,
     )
-    got = run_to_memory(streaming_ema(raw), output_mode="append", name_prefix="sema")
     want = ema(events, alpha=0.125)
 
     g = got.select("user_id", "event_id", "ema")
@@ -212,7 +227,10 @@ def test_stateful_streaming_ema_carries_state_across_batches(spark, tmp_path):
     # full recurrence tuple: streamed EMA + Wilder RSI across the batch
     # boundary ≡ the batch walk (bitwise — NULL warm-ups included)
     got2 = run_to_memory(
-        streaming_recursive_indicators(raw), output_mode="append", name_prefix="srec"
+        lambda s: streaming_recursive_indicators(raw(s)),
+        output_mode="append",
+        name_prefix="srec",
+        spark=spark,
     )
     want2 = recursive_indicators(events, alpha=0.125, period=14)
     g2 = got2.select("user_id", "event_id", "ema", "rsi_wilder")
@@ -548,7 +566,11 @@ def test_incremental_dedup_stream_out_of_order_arrival(spark, tmp_path):
         shutil.move(part, f"{src}/batch{i}.parquet")
         shutil.rmtree(stage)
         os.utime(f"{src}/batch{i}.parquet", (now + 10 * i, now + 10 * i))
-    run_incremental_dedup_stream(spark, src, store)
+    progress = run_incremental_dedup_stream(spark, src, store)
+    # one progress dict per file; numInputRows counts the rows of every
+    # scan of the batch: the shared empty-batch guard's and the step's
+    assert [p["batchId"] for p in progress] == [0, 1, 2]
+    assert sum(p["numInputRows"] for p in progress) == 2 * docs.count()
 
     flags = spark.read.parquet(f"{store}/flagged").collect()
     flagged_pairs = {frozenset((r.doc_id, r.dup_of)) for r in flags}
@@ -600,13 +622,13 @@ def test_stream_stream_interval_join_across_batches(spark, tmp_path):
     time.sleep(1.1)
     as_ns.filter(ts_back >= cutoff).coalesce(1).write.mode("append").parquet(src)
 
-    stream = events_stream_reader(spark, src + "/*.parquet", max_files_per_trigger=1)
-    v_s, p_s = legs(stream)
-    got = run_to_memory(
-        streaming_interval_join(v_s, p_s, gap="6 hours", watermark="30 days"),
-        output_mode="append",
-        name_prefix="ivj",
-    )
+    def build(s):
+        stream = events_stream_reader(s, src + "/*.parquet", max_files_per_trigger=1)
+        return streaming_interval_join(
+            *legs(stream), gap="6 hours", watermark="30 days"
+        )
+
+    got = run_to_memory(build, output_mode="append", name_prefix="ivj", spark=spark)
 
     assert got.count() == want.count() > 0
     assert got.exceptAll(want).count() == 0
@@ -620,8 +642,10 @@ def test_rocksdb_state_store_equals_default(spark, monkeypatch):
     """SPARK_GRAFT_STATE_STORE=rocksdb swaps Spark's bundled RocksDB
     provider into run_to_memory (the large-state deployment backend —
     state on local disk instead of the JVM heap). Results must be
-    identical to the default HDFS-backed provider, and both the
-    provider and shuffle-partition confs must be restored after."""
+    identical to the default HDFS-backed provider. The provider and
+    state-partition confs bind to the cloned session the stream is
+    built on; the caller's session never holds either, not even while
+    the stream is being built."""
     from crypto_data_pipeline_with_kafka_spark.sources.readers import (
         events_stream_reader,
     )
@@ -631,24 +655,39 @@ def test_rocksdb_state_store_equals_default(spark, monkeypatch):
     )
 
     sf = "/root/testdata/sf0.001"
+    parts_key = "spark.sql.shuffle.partitions"
     prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    caller = (spark.conf.get(parts_key), spark.conf.get(prov_key, None))
+    assert caller[1] is None  # the session default provider
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "3")
+    seen = []
 
     def run():
-        agg = streaming_tumbling_counts(
-            events_stream_reader(spark, f"{sf}/events.parquet")
-        )
-        return {
-            (r.bucket_start, r.event_type): (r.n, r.total)
-            for r in run_to_memory(agg, output_mode="complete").collect()
-        }
+        def build(s):
+            # confs as the stream is built: caller's and clone's
+            seen.append(
+                (
+                    (spark.conf.get(parts_key), spark.conf.get(prov_key, None)),
+                    (s.conf.get(parts_key), s.conf.get(prov_key, None)),
+                )
+            )
+            return streaming_tumbling_counts(
+                events_stream_reader(s, f"{sf}/events.parquet")
+            )
+
+        got = run_to_memory(build, output_mode="complete", spark=spark)
+        return {(r.bucket_start, r.event_type): (r.n, r.total) for r in got.collect()}
 
     base = run()
     monkeypatch.setenv("SPARK_GRAFT_STATE_STORE", "rocksdb")
     rocks = run()
     assert rocks == base and len(base) > 0
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev_parts
-    assert spark.conf.get(prov_key, None) is None  # restored (unset)
+    (base_caller, base_clone), (rocks_caller, rocks_clone) = seen
+    assert base_caller == rocks_caller == caller
+    assert base_clone == ("3", None)
+    assert rocks_clone[0] == "3"
+    assert rocks_clone[1].endswith("RocksDBStateStoreProvider")
+    assert (spark.conf.get(parts_key), spark.conf.get(prov_key, None)) == caller
 
 
 def test_compact_partitions_preserves_data_and_reduces_files(spark, tmp_path):
@@ -1111,13 +1150,16 @@ def test_transform_with_state_twin_builds_and_matches_when_runnable(
         "event_id long, ts long, user_id long, event_type string, "
         "value double, props string"
     )
-    raw = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    )
-    plan = streaming_recursive_indicators_tws(raw)
+
+    def raw(s):
+        return (
+            s.readStream.schema(raw_schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+            .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        )
+
+    plan = streaming_recursive_indicators_tws(raw(spark))
     # analysis ran: streaming flag + the full output schema resolved
     assert plan.isStreaming
     assert plan.columns == [
@@ -1131,9 +1173,191 @@ def test_transform_with_state_twin_builds_and_matches_when_runnable(
             "execution gated (SCALE.md documented boundary)"
         )
 
-    got = run_to_memory(plan, output_mode="append", name_prefix="tws")
+    got = run_to_memory(
+        lambda s: streaming_recursive_indicators_tws(raw(s)),
+        output_mode="append",
+        name_prefix="tws",
+        spark=spark,
+    )
     want = recursive_indicators(events, alpha=0.125, period=14)
     g = got.select("user_id", "event_id", "ema", "rsi_wilder")
     w = want.select("user_id", "event_id", "ema", "rsi_wilder")
     assert g.count() == w.count() == events.count()
     assert g.exceptAll(w).count() == 0 and w.exceptAll(g).count() == 0
+
+
+def _stage_files(frames, src):
+    """Write each frame as one parquet file in ``src`` with strictly
+    increasing mtimes, so a file-source stream reading one file per
+    trigger delivers frame i as epoch i."""
+    import glob as _glob
+    import os
+    import time as _time
+
+    os.makedirs(src)
+    now = _time.time()
+    for i, df in enumerate(frames):
+        stage = f"{src}/_stage"
+        df.coalesce(1).write.mode("overwrite").parquet(stage)
+        dst = f"{src}/batch{i}.parquet"
+        shutil.move(_glob.glob(f"{stage}/part-*.parquet")[0], dst)
+        shutil.rmtree(stage)
+        os.utime(dst, (now + 10 * i, now + 10 * i))
+
+
+def _crash_case(spark, tmp_path, kind):
+    """(run, read, n_rows) for one store stream over three staged files:
+    ``run(store_dir)`` drains the whole source into stores under
+    ``store_dir`` and returns the progress list; ``read(store_dir)``
+    returns a tuple of sorted row lists, one per store table, so a row
+    stored twice shows; ``n_rows`` is the source's row count."""
+    import os
+
+    from crypto_data_pipeline_with_kafka_spark.streaming import pipeline
+
+    sf = os.path.join(os.path.dirname(SF), "sf0.001")  # the smallest fixture
+    src = str(tmp_path / "src")
+
+    def sorted_rows(path, cols):
+        return sorted(tuple(r) for r in spark.read.parquet(path).select(*cols).collect())
+
+    if kind == "indicator":
+        events = load_table(spark, sf, "events")
+        as_ns = events.withColumn("ts", F.unix_micros("ts") * 1000)
+        ts_back = F.timestamp_micros(F.expr("ts div 1000"))
+        c1 = F.lit("2024-01-11").cast("timestamp")
+        c2 = F.lit("2024-01-21").cast("timestamp")
+        _stage_files(
+            [
+                as_ns.filter(ts_back < c1),
+                as_ns.filter((ts_back >= c1) & (ts_back < c2)),
+                as_ns.filter(ts_back >= c2),
+            ],
+            src,
+        )
+
+        def run(store):
+            return pipeline.run_incremental_indicator_stream(
+                spark, src, f"{store}/events", f"{store}/ind", lookback_days=60
+            )
+
+        def read(store):
+            return (
+                sorted_rows(f"{store}/events", ["event_id"]),
+                sorted_rows(f"{store}/ind", ["user_id", "ts", "type_name", "ind_value"]),
+            )
+
+        return run, read, events.count()
+
+    if kind == "ivf":
+        from crypto_data_pipeline_with_kafka_spark.operators.similarity import (
+            _ensure_ann_base,
+            _seed_centroids,
+        )
+
+        emb = load_table(spark, sf, "embeddings")
+        base = _ensure_ann_base(emb, "vec_id")
+        cents = _seed_centroids(base, 8, "vec_id").localCheckpoint()
+        base.unpersist()
+        cuts = [(0, 167), (167, 334), (334, 500)]
+        _stage_files(
+            [emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)) for lo, hi in cuts],
+            src,
+        )
+
+        def run(store):
+            if not target_exists(spark, f"{store}/centroids"):
+                cents.write.parquet(f"{store}/centroids")
+            return pipeline.run_incremental_ivf_stream(spark, src, store, min_cosine=0.2)
+
+        def read(store):
+            return (
+                sorted_rows(f"{store}/flagged", ["vec_id", "match_id", "cosine"]),
+                sorted_rows(f"{store}/cells", ["vec_id", "centroid_id", "batch_id"]),
+            )
+
+        return run, read, emb.count()
+
+    docs = load_table(spark, sf, "documents")
+    cuts = [(0, 167), (167, 334), (334, 500)]
+    _stage_files(
+        [docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)) for lo, hi in cuts],
+        src,
+    )
+    runner, cols = {
+        "minhash": (pipeline.run_incremental_dedup_stream, ["doc_id", "dup_of", "jaccard"]),
+        "hamming": (pipeline.run_incremental_hamming_stream, ["doc_id", "dup_of", "hamming"]),
+        "winnow": (pipeline.run_incremental_winnow_stream, ["doc_id", "overlap_of", "shared"]),
+    }[kind]
+
+    def run(store):
+        return runner(spark, src, store)
+
+    def read(store):
+        return (sorted_rows(f"{store}/flagged", cols),)
+
+    return run, read, docs.count()
+
+
+@pytest.mark.parametrize(
+    "kind",
+    [
+        "minhash",
+        "indicator",
+        "hamming",
+        pytest.param(
+            "winnow",
+            marks=pytest.mark.xfail(
+                raises=StreamingQueryException,
+                strict=True,
+                reason="the winnowing store refuses the re-drain from epoch 0 "
+                "once epoch 1 is written (check_store_batch_monotonic: batch "
+                "ids must not decrease), so a crash after epoch 1's writes "
+                "cannot be recovered by re-running the stream",
+            ),
+        ),
+        "ivf",
+    ],
+)
+def test_stream_crash_restart_equals_uninterrupted_run(spark, tmp_path, monkeypatch, kind):
+    """Crash-restart equivalence of every store stream: a fault injected
+    at epoch 1 either BEFORE the step's writes or AFTER them (the crash
+    between sink write and offset commit) fails the drain; a second call
+    on the same source and stores re-drains from epoch 0 (no durable
+    checkpoint: progress for batches 0, 1 and 2 again) and leaves the
+    stores equal, row for row, to an uninterrupted run — the batch_id=N
+    overwrite and the event anti-join make the re-drain idempotent. The fault injector wraps the step that
+    run_store_stream drives; the engine has no hook for it."""
+    from crypto_data_pipeline_with_kafka_spark.streaming import pipeline
+
+    real = pipeline.run_store_stream
+
+    def crash_at_epoch_1(where):
+        def run_store_stream(stream, step):
+            def faulty(batch, epoch_id):
+                if epoch_id == 1 and where == "before":
+                    raise RuntimeError("injected fault before epoch 1's writes")
+                step(batch, epoch_id)
+                if epoch_id == 1 and where == "after":
+                    raise RuntimeError("injected fault after epoch 1's writes")
+
+            return real(stream, faulty)
+
+        return run_store_stream
+
+    run, read, n_rows = _crash_case(spark, tmp_path, kind)
+    run(str(tmp_path / "clean"))
+    want = read(str(tmp_path / "clean"))
+    assert all(want)  # no store table is empty
+    if kind == "indicator":  # each event stored once
+        assert len(want[0]) == len(set(want[0])) == n_rows
+
+    for where in ("before", "after"):
+        store = str(tmp_path / where)
+        with monkeypatch.context() as m:
+            m.setattr(pipeline, "run_store_stream", crash_at_epoch_1(where))
+            with pytest.raises(StreamingQueryException, match=f"injected fault {where}"):
+                run(store)
+        progress = run(store)
+        assert [p["batchId"] for p in progress] == [0, 1, 2]
+        assert read(store) == want, where
